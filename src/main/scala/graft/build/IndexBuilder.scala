@@ -175,14 +175,6 @@ object IndexBuilder {
       }
     }
 
-    val verbose = sys.env.contains("GRAFT_BUILD_VERBOSE")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (verbose) {
-      val now = System.nanoTime()
-      System.err.println(f"[build] $name: ${(now - tPhase) / 1e9}%.2fs")
-      tPhase = now
-    }
-
     // docs itself is not persisted — every consumer streams a cheap
     // per-partition pass over DocIds' pinned sorted intermediate
     // numDocs rides out of DocIds pass 1 (the P-row partition tally) — the
@@ -193,7 +185,6 @@ object IndexBuilder {
     // pass — it rides out of the norms job below (sum_dl/n_docs columns),
     // which already tokenizes every field once.
     val (docs, sortedHandle, numDocs) = DocIds.assignWithHandle(turns, cfg.docIdPartitions)
-    phase("docids+count")
     // analyzer config identity rides in the id: a field set or chain change
     // must invalidate resume, not silently reuse old postings
     val cfgHash = (fields.map(f => s"$f=${analyzers(f).spec}").mkString(";").hashCode
@@ -218,7 +209,6 @@ object IndexBuilder {
     if (!fs.exists(new Path(dir, "docstore/_SUCCESS"))) {
       docs.write.mode("overwrite").parquet(s"$dir/docstore")
     }
-    phase("docstore")
 
     // norms sidecar: per (field, chunk) packed dl array, direct-indexed by
     // docId - chunk*chunkDocs (docIds are rank-dense). Lucene-style: dl is
@@ -254,72 +244,24 @@ object IndexBuilder {
         .toDF("field", "chunk", "blob", "sum_dl", "n_docs")
         .write.mode("overwrite").parquet(s"$dir/norms")
     }
-    phase("norms")
     // avgdl over ALL docs (zero-token docs included), from the norms stats
     val avgdl = spark.read.parquet(s"$dir/norms")
       .groupBy("field").agg(sum("sum_dl").as("s"), sum("n_docs").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1).toDouble / r.getLong(2).toDouble)
       .toMap
-    phase("avgdl")
 
     val occs = termOccs(docs, analyzers)
       .withColumn("bucket", bucketCol(col("term"), cfg.buckets))
       .withColumn("chunk", (col("docId") / cfg.chunkDocs).cast("long"))
 
-    // Posting grouping: hash UDAF by default, sort-based selectable.
-    // Round 5 first flipped the default to a Tungsten sort shuffle +
-    // streaming run-length grouper on the strength of a sequential A/B
-    // (61.4 vs 69.6 s at 2M turns) — but sequential whole-arm runs on this
-    // host bias toward whichever arm lands in the quieter window (the same
-    // failure mode as the sequential scaling legs), and a paired in-JVM
-    // interleaved A/B (tools.AggAb: sort rep, hash rep, alternating in one
-    // bound JVM) reversed the verdict at EVERY size/parallelism tested:
-    // sort/hash = 1.03 (4c/600k), 1.06 (32c/150k), 1.15 (32c/600k),
-    // 1.07 (32c/2M), hash reps the stabler arm throughout. The UDAF's
-    // per-group PostingBuf serde is real cost, but the sort path re-sorts
-    // ALL occurrence rows on a 5-part key where the hash path only shuffles
-    // them — measurement beats the narrative. Both paths produce identical
-    // groups (GoldenSpec digest); GRAFT_AGG (env) or conf graft.agg select
-    // per build, conf winning so one live JVM can alternate reps.
-    val aggMode = spark.conf.getOption("graft.agg")
-      .getOrElse(sys.env.getOrElse("GRAFT_AGG", "hash"))
-    val groupedRaw = (if (aggMode == "hash") {
-      val postingUdaf = udaf(PostingAgg)
-      occs.groupBy("field", "term", "bucket", "chunk")
-        .agg(postingUdaf(col("docId"), col("tf"), col("dl")).as("p"))
-    } else {
-      val sortedOccs = occs
-        .select(col("field"), col("term"), col("bucket"), col("chunk"),
-          col("docId"), col("tf"), col("dl"))
-        .repartition(col("bucket"), col("chunk"))
-        .sortWithinPartitions("bucket", "chunk", "field", "term", "docId")
-        .as[(String, String, Int, Long, Long, Int, Int)]
-      sortedOccs.mapPartitions { it =>
-        new Iterator[(String, String, Int, Long, PostingsOut)] {
-          private var cur: (String, String, Int, Long, Long, Int, Int) = _
-          private var live = it.hasNext
-          if (live) cur = it.next()
-          def hasNext: Boolean = live
-          def next(): (String, String, Int, Long, PostingsOut) = {
-            val f = cur._1; val t = cur._2; val b = cur._3; val c = cur._4
-            val db = new scala.collection.mutable.ArrayBuilder.ofLong
-            val tb = new scala.collection.mutable.ArrayBuilder.ofInt
-            val lb = new scala.collection.mutable.ArrayBuilder.ofInt
-            var inGroup = true
-            while (inGroup) {
-              db += cur._5; tb += cur._6; lb += cur._7
-              if (it.hasNext) {
-                cur = it.next()
-                inGroup = cur._1 == f && cur._2 == t && cur._3 == b && cur._4 == c
-              } else { live = false; inGroup = false }
-            }
-            (f, t, b, c, PostingsOut(db.result(), tb.result(), lb.result()))
-          }
-        }
-      }.toDF("field", "term", "bucket", "chunk", "p")
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-
-    if (verbose) { groupedRaw.count(); phase("postings:agg") } // diagnostic-only job
+    // Posting grouping: hash UDAF, not a sort-based grouper — sorting
+    // re-sorts every occurrence row on a 5-part key where this only shuffles
+    // them, and measured slower at every size and parallelism (SURVEY.md,
+    // posting-grouping A/B)
+    val postingUdaf = udaf(PostingAgg)
+    val groupedRaw = occs.groupBy("field", "term", "bucket", "chunk")
+      .agg(postingUdaf(col("docId"), col("tf"), col("dl")).as("p"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // header stats: df (uv) + pv per term, reference header semantics
     // (InvertedIndexGenerateReducer.java:390-395). Derived from the chunk
@@ -336,7 +278,6 @@ object IndexBuilder {
       .groupBy("field", "term", "bucket")
       .agg(sum("dfc").as("df"), sum("pvc").as("pv"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (verbose) { stats.count(); phase("postings:stats") } // diagnostic-only job
 
     // optional truncation cap (isInvalidData mirror): running doc count per
     // term over chunk order; drop/trim chunks past the cap. The window
@@ -395,12 +336,10 @@ object IndexBuilder {
           .repartition(col("bucket"), col("chunk"))
           .sortWithinPartitions("field", "term", "chunk")
         part.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/postings")
-        phase(s"postings g=$g")
         stats.filter(col("bucket") % groups === g)
           .repartition(col("bucket")) // one task per bucket dir: files stay
           // bounded by #buckets, not tasks x buckets (commit cost is per file)
           .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/termstats")
-        phase(s"termstats g=$g")
         val wallMs = (System.nanoTime() - t0) / 1000000L
         // lineage + metrics per completed group, written atomically (tmp+rename)
         val tmp = new Path(manifestDir, s".group-$g.json.tmp")

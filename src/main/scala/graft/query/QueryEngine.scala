@@ -77,80 +77,61 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
 
   // driver-side term-dictionary cache: repeated queries skip the stats job
   // entirely (absent terms cached as None). The analog of the reference
-  // searcher's meta multiget being fronted by memcached (S10). Bounded like
-  // planCache (entries are tiny, but a long-lived engine fed adversarial
-  // vocabulary should not grow without limit).
+  // searcher's meta multiget being fronted by memcached (S10). Keyed per
+  // term, so fresh queries sharing a word also skip it. Bounded (entries are
+  // tiny, but a long-lived engine fed adversarial vocabulary should not grow
+  // without limit).
   private val StatsCacheMaxEntries = 1 << 20
   private val statsCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Option[(Long, Long)]]()
 
-  // prepared-plan cache: a repeated interactive query (the dominant serving
-  // pattern; the reference fronts its searcher with memcached the same way)
-  // reuses the analyzed+planned Dataset — Dataset construction and Catalyst
-  // planning are ~40% of the interactive floor (measured 70-110 ms of
-  // ~250 ms). Valid because the index is immutable per engine and plans are
-  // deterministic in (terms, k). Entry = one plan tree (KBs — the heavy
-  // norms LocalRelation is SHARED across plans via normsDsCache below, not
-  // re-encoded per entry). Bounded: cleared wholesale at the cap (plans
-  // rebuild in ~10 ms; an LRU would buy nothing at this entry cost).
-  private val PlanCacheMaxEntries = 1024
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(Seq[(String, String)], Int), DataFrame]()
+  // prepared-query cache, keyed (shape, terms, k): the planned top-k or
+  // score-all Dataset, or the AND count, of a repeated interactive request
+  // (the dominant serving pattern; the reference fronts its searcher with
+  // memcached the same way). Valid because the index is immutable per
+  // engine and every entry is a deterministic function of its key. Cleared
+  // wholesale at the cap (plans rebuild in ~20 ms; an LRU would buy nothing
+  // at this entry cost).
+  private val PreparedMaxEntries = 1024
+  private val prepared =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, String)], Int), AnyRef]()
 
-  // prepared-plan cache for the SCORE-ALL shape (fetchFiltered's candidate
-  // scoring; k-independent), same validity argument and normsGen guard as
-  // planCache. Kept separate so topK's (terms, k) keyspace and this
-  // (terms)-keyed one cannot evict each other at their different rates.
-  private val scoreAllCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[(String, String)], DataFrame]()
-
-  // memoized matchCount RESULTS: the index is immutable per engine, so the
-  // AND-intersection count is a pure function of the term set — repeated
-  // pv/uv stats queries (as interactive as top-k; the reference fronts its
-  // stats multiget with memcached the same way) become a map hit instead of
-  // a kernel job. Values are longs — they pin no norms generation, so no
-  // normsGen interplay. Bounded like statsCache.
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[(String, String)], java.lang.Long]()
-
-  // one encoded norms LocalRelation per queried FIELD SET (not per query):
-  // createDataset eagerly encodes the blobs into the plan's LocalRelation,
-  // so without this every planCache entry would hold its own copy of the
-  // norms sidecar (up to NormsCacheMaxBytes each — a driver-heap leak).
-  // Keyed on the SORTED field list (query order must not mint new entries)
-  // and bounded like the sibling caches — entries are heavy.
-  private val NormsDsCacheMaxEntries = 64
-  private val normsDsCache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], DataFrame]()
-  // bumped on every norms-cache clear: an in-flight topK that built its plan
-  // against a since-evicted norms generation must not insert it into
-  // planCache (the plan would pin the stale copy alongside the rebuilt one)
-  private val normsGen = new java.util.concurrent.atomic.AtomicLong()
-  // guards the two short norms-generation critical sections (evict+bump in
-  // normsDs, gen-recheck+insert in topK) so an eviction cannot land BETWEEN
-  // a stale-gen check and the plan insert — without it a plan built against
-  // an evicted norms copy could still enter planCache and pin that copy
-  // (memory retention only, but why carry the race). Never held across a
-  // Spark job — both sections are local map ops.
-  private val cacheLock = new Object
+  /** Cached value of `key`, else `build` it OUTSIDE the map: building runs
+    * Spark jobs, and a computeIfAbsent mapping that long would serialize
+    * unrelated keys hashing to the same bin. A concurrent duplicate build is
+    * harmless — putIfAbsent keeps the first. */
+  private def memo[V <: AnyRef](key: (String, Seq[(String, String)], Int))(build: => V): V = {
+    val hit = prepared.get(key)
+    if (hit != null) return hit.asInstanceOf[V]
+    val v = build
+    if (prepared.size >= PreparedMaxEntries) prepared.clear()
+    val prev = prepared.putIfAbsent(key, v)
+    (if (prev != null) prev else v).asInstanceOf[V]
+  }
 
   /** Serving fast path for the norms sidecar: when it is small (interactive-
-    * scale index), collect it once per engine and inject the query fields'
-    * rows as a LOCAL relation into the chunk shuffle — this removes a second
+    * scale index), collect it once per engine, encode one LOCAL relation per
+    * field, and inject the query fields' relations into the chunk shuffle — this removes a second
     * postings scan, a distinct aggregation (2 exchanges) and a broadcast
     * join from EVERY query (measured ~80 ms of the ~250 ms interactive
     * floor). Above the size cap (or on non-local storage) the distributed
     * semi-join path below keeps the 100 TB shape: norms pruned to chunks
     * that actually hold postings, shipped through the same shuffle. */
-  private val NormsCacheMaxBytes = // sys-prop override so specs cover BOTH paths
+  // sys-prop override so specs cover BOTH paths. Retention bound: cached
+  // plans share these relations in their analyzed plans, but the optimizer
+  // copies the queried fields' rows into each plan, so the prepared cache
+  // can hold PreparedMaxEntries x the queried fields' norms bytes.
+  private val NormsCacheMaxBytes =
     sys.props.get("graft.norms.cache.max.bytes").map(_.toLong).getOrElse(64L << 20)
-  private lazy val normsLocal: Option[Map[String, Seq[(String, String, Long, Array[Byte])]]] = {
+  private lazy val normsLocal: Option[Map[String, DataFrame]] = {
+    import spark.implicits._
     val normsDir = new java.io.File(dir, "norms")
     // non-local paths (hdfs:// etc.) fail exists() -> distributed path
     if (!normsDir.exists() || graft.FsUtil.dirSize(normsDir) > NormsCacheMaxBytes) None
     else Some(norms.select("field", "chunk", "blob").collect()
       .map(r => (r.getString(0), QueryKernel.NormsTerm, r.getLong(1), r.getAs[Array[Byte]](2)))
-      .toSeq.groupBy(_._1))
+      .toSeq.groupBy(_._1)
+      .map { case (f, rows) => f -> spark.createDataset(rows).toDF("field", "term", "chunk", "blob") })
   }
 
   /** (df, pv) per query term; terms absent from the corpus are omitted. */
@@ -182,32 +163,12 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   }
 
   /** Top-k (docId, score), exact BM25 over the AND intersection. */
-  def topK(q: SearchQuery): DataFrame = {
-    val key = (q.terms, q.k)
-    val hit = planCache.get(key)
-    if (hit != null) return hit
-    // build OUTSIDE the map: planning runs a termstats Spark job, and a
-    // computeIfAbsent mapping that long would serialize unrelated queries
-    // hashing to the same bin (CHM requires short mappings). A concurrent
-    // duplicate build is harmless — putIfAbsent keeps the first. The plan
-    // is only cached if no norms-cache clear happened while building (else
-    // it pins an evicted norms generation; see normsGen).
-    val gen = normsGen.get()
-    val df = topKUncached(q)
-    cacheLock.synchronized {
-      if (normsGen.get() != gen) return df
-      if (planCache.size >= PlanCacheMaxEntries) planCache.clear()
-      val prev = planCache.putIfAbsent(key, df)
-      if (prev != null) prev else df
-    }
-  }
+  def topK(q: SearchQuery): DataFrame = memo(("topK", q.terms, q.k))(topKPlan(q))
 
-  /** The cache-miss path of [[topK]] — also the honest target for latency
-    * diagnostics (tools.LatProbe), which must measure construction and
-    * planning, not a map lookup. */
-  private[graft] def topKUncached(q: SearchQuery): DataFrame = {
+  /** The top-k plan; with `tel` the kernel also feeds its counters. */
+  private def topKPlan(q: SearchQuery, tel: QueryKernel.KernelTelemetry = null): DataFrame = {
     import spark.implicits._
-    candidates(q, q.k)
+    candidates(q, q.k, tel)
       .toDF("docId", "score")
       .orderBy(desc("score"), asc("docId"))
       .limit(q.k)
@@ -238,17 +199,14 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     * (doc_gz_client.go:171-232); `text` returned verbatim (per-turn text
     * equality invariant). */
   def fetch(q: SearchQuery): DataFrame = {
-    val hits = topK(q)
-    val rows = hits.collect() // k rows only
-    if (rows.isEmpty) // schema-stable empty result: same COLUMN ORDER as the
-      // join path below (join on Seq("docId") moves docId first)
-      return docstore.limit(0).withColumn("score", lit(0.0))
-        .select((col("docId") +: docstore.columns.filterNot(_ == "docId").map(col)
-          :+ col("score")): _*)
-    val ids = rows.map(_.getLong(0))
+    import spark.implicits._
+    // join the k collected rows as a LOCAL frame: joining topK(q) itself
+    // would run the whole top-k plan a second time. Collect the cached frame
+    // itself (a derived Dataset would be planned anew).
+    val hits = topK(q).collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
     docstore
-      .filter(col("docId").isin(ids: _*)) // parquet min/max pruning (sorted col)
-      .join(broadcast(hits), Seq("docId"))
+      .filter(col("docId").isin(hits.map(_._1): _*)) // parquet min/max pruning (sorted col)
+      .join(broadcast(hits.toDF("docId", "score")), Seq("docId"))
       .orderBy(desc("score"), asc("docId"))
   }
 
@@ -264,20 +222,7 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     // the scoring subtree is the expensive plan (chunk shuffle + norms
     // injection) and is k- and predicate-independent — cache it; the
     // per-call join/filter/limit on top is cheap to re-plan
-    val hit = scoreAllCache.get(q.terms)
-    val scored = if (hit != null) hit else {
-      val gen = normsGen.get()
-      val df = scoreAll(q)
-      cacheLock.synchronized {
-        if (normsGen.get() != gen) df
-        else {
-          if (scoreAllCache.size >= PlanCacheMaxEntries) scoreAllCache.clear()
-          val prev = scoreAllCache.putIfAbsent(q.terms, df)
-          if (prev != null) prev else df
-        }
-      }
-    }
-    scored
+    memo(("scoreAll", q.terms, 0))(scoreAll(q))
       .join(docstore, Seq("docId"))
       .filter(predicate)
       .orderBy(desc("score"), asc("docId"))
@@ -287,10 +232,11 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   /** Count of the AND intersection — the reference's pv/uv stats path needs
     * only a count, so this skips scoring, norms, and the top-k heap entirely
     * (a count-only kernel instead of candidates(q, MaxValue)). */
-  def matchCount(q: SearchQuery): Long = {
+  def matchCount(q: SearchQuery): Long =
+    memo(("count", q.terms, 0))(java.lang.Long.valueOf(countAnd(q))).longValue
+
+  private def countAnd(q: SearchQuery): Long = {
     import spark.implicits._
-    val memo = countCache.get(q.terms)
-    if (memo != null) return memo.longValue()
     val ts = termStatsOf(q)
     if (q.terms.isEmpty || q.terms.exists(t => !ts.contains(t))) return 0L
     if (q.terms.size == 1) return ts(q.terms.head)._1 // df IS the count
@@ -304,7 +250,7 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     val terms = q.terms.toArray
     val numChunks = math.max(1L, (manifest.numDocs + manifest.chunkDocs - 1) / manifest.chunkDocs)
     val p = math.min(numChunks, spark.sessionState.conf.numShufflePartitions.toLong).toInt
-    val total = rows
+    rows
       .repartition(p, col("chunk"))
       .sortWithinPartitions("chunk")
       .mapPartitions { it =>
@@ -322,9 +268,6 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
         }
       }
       .toDF("n").agg(sum("n")).collect()(0).getLong(0)
-    if (countCache.size >= StatsCacheMaxEntries) countCache.clear()
-    countCache.put(q.terms, total)
-    total
   }
 
   /** All docIds matching the AND conjunction, ascending (the reference's
@@ -340,21 +283,15 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     candidates(q, Int.MaxValue).toDF("docId", "score")
   }
 
-  /** Uncached profiled top-k: the exact topKUncached plan run with kernel
-    * accumulators registered, returning (hits, counters). Bypasses the plan
-    * cache on purpose — an accumulator is per-query state a cached plan must
-    * not pin — so this is a diagnostic surface (SearchCli explain), not the
-    * serving path. */
+  /** Profiled top-k: the topK plan run with kernel accumulators registered,
+    * returning (hits, counters). Bypasses the prepared-query cache on
+    * purpose — an accumulator is per-query state a cached plan must not pin
+    * — so this is a diagnostic surface (SearchCli explain), not the serving
+    * path. */
   def topKProfiled(q: SearchQuery): (Array[(Long, Double)], Map[String, Long]) = {
     import spark.implicits._
     val tel = QueryKernel.KernelTelemetry.register(spark)
-    val hits = candidates(q, q.k, tel)
-      .toDF("docId", "score")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(q.k)
-      .as[(Long, Double)]
-      .collect()
-    (hits, tel.snapshot)
+    (topKPlan(q, tel).as[(Long, Double)].collect(), tel.snapshot)
   }
 
   /** Per-chunk conjunctive scoring; emits up to `localK` best per chunk. */
@@ -377,23 +314,7 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     // tiny distinct set (the distributed 100 TB path)
     val fields = q.terms.map(_._1).distinct
     val nrows = normsLocal match {
-      case Some(byField) =>
-        val nkey = fields.sorted
-        val nhit = normsDsCache.get(nkey)
-        if (nhit != null) nhit
-        else {
-          // clear only when INSERTING at the cap (a hit must not wipe the
-          // cache), and clear planCache with it — cached plans pin evicted
-          // norms LocalRelations, so evicting one without the other frees
-          // nothing and can retain multiple generations of the same copy
-          if (normsDsCache.size >= NormsDsCacheMaxEntries) cacheLock.synchronized {
-            normsDsCache.clear(); planCache.clear(); scoreAllCache.clear()
-            normsGen.incrementAndGet()
-          }
-          normsDsCache.computeIfAbsent(nkey, fs => // pure local encode, no job
-            spark.createDataset(fs.flatMap(f => byField.getOrElse(f, Seq.empty)))
-              .toDF("field", "term", "chunk", "blob"))
-        }
+      case Some(byField) => fields.flatMap(byField.get).reduce(_ unionAll _)
       case None =>
         norms
           .filter(col("field").isin(fields: _*))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.build.{DocIds, IndexBuilder, IndexConfig}
 import graft.gen.TranscriptGen
@@ -120,6 +121,55 @@ class EndToEndSpec extends SparkFunSuite {
     } finally sys.props.remove(prop)
   }
 
+  /** 8 threads drive a COLD engine past the prepared-query cache's
+    * 1024-entry cap: one term set at k = 1..1100 (1100 top-k keys) with
+    * fetchFiltered and matchCount mixed in, so the cache clears while other
+    * threads read and publish. Top-k order is total (score desc, docId asc),
+    * so the serial answer at k is the k-prefix of the serial answer at 1100. */
+  private def preparedCacheOverCap(cold: QueryEngine): Unit = {
+    def hits(df: DataFrame): Seq[(Long, Double)] =
+      df.select("docId", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val maxK = 1100
+    val base = SearchQuery.of(Seq("text" -> Seq("the", "run")), maxK)
+    val isUser = col("role") === "user"
+    val roleOf = oracleDocs.map(d => d.docId -> d.role).toMap
+    val all = Bm25Oracle.topK(oracle, base.copy(k = Int.MaxValue))
+    val serialTop = hits(engine.topK(base))
+    val serialUsers = hits(engine.fetchFiltered(base, isUser))
+    val serialCount = engine.matchCount(base)
+    assert(serialTop.nonEmpty && serialTop == all.take(maxK))
+    assert(serialUsers.nonEmpty && serialUsers == all.filter(h => roleOf(h._1) == "user").take(maxK))
+    assert(serialCount > 0 && serialCount == Bm25Oracle.stats(oracle, base).total)
+
+    val calls: Seq[(String, () => Any, Any)] = (1 to maxK).flatMap { k =>
+      val q = base.copy(k = k)
+      (s"topK k=$k", () => hits(cold.topK(q)), serialTop.take(k)) +:
+        (if (k % 25 != 0) Nil else Seq(
+          (s"fetchFiltered k=$k", () => hits(cold.fetchFiltered(q, isUser)), serialUsers.take(k)),
+          (s"matchCount k=$k", () => cold.matchCount(q), serialCount)))
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = calls.map { case (name, run, exp) =>
+        (name, exp, pool.submit(new java.util.concurrent.Callable[Any] { def call(): Any = run() }))
+      }
+      futures.foreach { case (name, exp, f) =>
+        assert(f.get(300, java.util.concurrent.TimeUnit.SECONDS) == exp, s"$name diverged under concurrency")
+      }
+    } finally pool.shutdownNow()
+  }
+
+  test("prepared-query cache over its cap under concurrency == serial == oracle") {
+    preparedCacheOverCap(new QueryEngine(spark, indexDir))
+  }
+
+  test("prepared-query cache over its cap under concurrency, distributed norms path") {
+    val prop = "graft.norms.cache.max.bytes"
+    sys.props(prop) = "0"
+    val distEngine = try new QueryEngine(spark, indexDir) finally sys.props.remove(prop)
+    preparedCacheOverCap(distEngine)
+  }
+
   test("per-turn text equality: fetched text == generator text for every hit") {
     val q = queries(1)._2 // error AND timeout
     val rows = engine.fetch(q).collect()
@@ -148,6 +198,12 @@ class EndToEndSpec extends SparkFunSuite {
     val hits = engine.fetch(q).collect()
     assert(hits.length == 1)
     assert(hits(0).getString(hits(0).fieldIndex("text")).contains("needle-000002"))
+  }
+
+  test("fetch of an absent term is empty, with the column order of a non-empty fetch") {
+    val empty = engine.fetch(SearchQuery.of(Seq("text" -> Seq("zzznotpresent")), 10))
+    assert(empty.collect().isEmpty)
+    assert(empty.columns.toSeq == engine.fetch(queries(1)._2).columns.toSeq)
   }
 
   test("index layout: postings are bucket-partitioned, docstore docId-sorted") {
