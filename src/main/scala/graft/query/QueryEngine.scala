@@ -1,7 +1,8 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.analyze.Analyzers
 import graft.build.IndexBuilder
@@ -54,11 +55,12 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
   *     -> shuffle by chunk (only the query terms' postings move)   } job 2
   *     -> per-chunk conjunctive DAAT + block-max skip -> local k  /
   *     -> global top-k (TakeOrderedAndProject tree-reduce)
-  *   docstore fetch: docId IN (hits) pushdown + broadcast join    — job 3
+  *   docstore fetch: docId IN (hits) pushdown scan, collected;
+  *     ordered by top-k rank on the driver (no join, no exchange) — job 3
   *
   * Replaces the reference's searcher/meta/hdfsreader HTTP fan-out
-  * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232) with
-  * exactly two exchanges.
+  * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232): the
+  * chunk shuffle moves the postings, and the fetch adds no exchange.
   */
 class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable {
 
@@ -195,20 +197,38 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     }
   }
 
-  /** Top-k joined back to the docstore — the J3 hits×docstore join
-    * (doc_gz_client.go:171-232); `text` returned verbatim (per-turn text
-    * equality invariant). */
+  /** Top-k hits with their stored fields — the reference's point lookup of
+    * the hits' Doc blocks (doc_gz_client.go:118-232). One docstore job reads
+    * the hit rows (docId IN (hits), pushed to parquet, whose min/max stats
+    * prune the docId-sorted files); the driver orders them by top-k rank
+    * (score desc, docId asc). The result is a LOCAL frame — docId, the
+    * docstore columns, score — so collecting it runs no job; `text` is
+    * returned verbatim (per-turn text equality invariant). No hits, no
+    * docstore job. A hit without a docstore row means a damaged index and
+    * throws, naming the docIds, rather than returning a short page. */
   def fetch(q: SearchQuery): DataFrame = {
-    import spark.implicits._
-    // join the k collected rows as a LOCAL frame: joining topK(q) itself
-    // would run the whole top-k plan a second time. Collect the cached frame
-    // itself (a derived Dataset would be planned anew).
-    val hits = topK(q).collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
-    docstore
-      .filter(col("docId").isin(hits.map(_._1): _*)) // parquet min/max pruning (sorted col)
-      .join(broadcast(hits.toDF("docId", "score")), Seq("docId"))
-      .orderBy(desc("score"), asc("docId"))
+    // collect the cached frame itself (a derived Dataset would be planned anew)
+    val hits = topK(q).collect()
+    val ids = hits.toSeq.map(_.getLong(0))
+    val rank = ids.zipWithIndex.toMap
+    val byRank = new Array[Row](hits.length)
+    if (hits.nonEmpty)
+      stored.filter(col("docId").isin(ids: _*)).collect()
+        .foreach(r => byRank(rank(r.getLong(0))) = r)
+    val missing = ids.indices.filter(byRank(_) == null).map(ids)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"docstore of index $dir has no row for ${missing.size} of ${hits.length} top-k docIds: " +
+          missing.take(20).mkString(", ") + (if (missing.size > 20) ", ..." else "") +
+          " — the index is damaged, rebuild it")
+    val rows = hits.indices.map(i => Row.fromSeq(byRank(i).toSeq :+ hits(i).getDouble(1)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      stored.schema.add("score", DoubleType, nullable = false))
   }
+
+  /** The docstore with docId first — the column order of a fetch. */
+  private lazy val stored: DataFrame =
+    docstore.select(("docId" +: docstore.columns.toSeq.filterNot(_ == "docId")).map(col): _*)
 
   /** Result post-filter — the reference's `req.filter` surface
     * (service/searcher/module/poseidon.go:180-215; its own implementation is

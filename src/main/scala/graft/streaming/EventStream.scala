@@ -94,9 +94,7 @@ object EventStream {
     // time, only while NO query is running (see below), so the non-atomic
     // multi-file move cannot be half-read.
     val stage = s"$base/stage"
-    ev.withColumn("b",
-        when(col("ts") < lit(boundary), "b1").otherwise("b2"))
-      .write.mode("overwrite").partitionBy("b").parquet(stage)
+    stageBatches(ev, boundary, stage)
     def landBatch(name: String): Unit = {
       val dir = new java.io.File(s"$stage/b=$name")
       Option(dir.listFiles()).getOrElse(Array.empty)
@@ -128,6 +126,15 @@ object EventStream {
     spark.read.schema("hour STRING, event_type STRING, n BIGINT, sum_value DOUBLE")
       .parquet(out).orderBy("hour", "event_type")
   }
+
+  /** Stages `ev` as the two chronological batches of [[hourlyAppendGate]]
+    * in one partitioned write: `stage/b=b1` holds ts < boundary, `stage/b=b2`
+    * the rest. Rows with a null ts fall in no hour window and are dropped
+    * before staging, so they land in neither batch. */
+  private[graft] def stageBatches(ev: DataFrame, boundary: java.sql.Timestamp, stage: String): Unit =
+    ev.filter(col("ts").isNotNull)
+      .withColumn("b", when(col("ts") < lit(boundary), "b1").otherwise("b2"))
+      .write.mode("overwrite").partitionBy("b").parquet(stage)
 
   /** Production shape — the reference's size/lateness flush (T2/T3,
     * logto_hdfs_collector.go:337-390) as a watermarked APPEND-mode stream to

@@ -185,6 +185,64 @@ class EndToEndSpec extends SparkFunSuite {
     }
   }
 
+  /** On every fixed query, fetch(q) gives the oracle's (docId, score) in
+    * rank order, with the generator's text. q04 (k=100) fetches more than 10
+    * ids, where parquet gets a docId range instead of an IN list; q08 (an
+    * absent term) fetches nothing. */
+  private def fetchParity(e: QueryEngine): Unit = {
+    val textByDocId = oracleDocs.map(d => d.docId -> d.text).toMap
+    val fetched = queries.map { case (name, q) =>
+      val rows = e.fetch(q).collect()
+      val got = rows.map(r => (r.getAs[Long]("docId"), r.getAs[Double]("score"))).toSeq
+      assert(got == Bm25Oracle.topK(oracle, q), s"$name: fetch differs from the oracle\n got=$got")
+      rows.foreach { r =>
+        assert(r.getAs[String]("text") == textByDocId(r.getAs[Long]("docId")), s"$name text")
+      }
+      name -> rows.length
+    }.toMap
+    assert(fetched("q04_stopword_k100") > 10 && fetched("q08_absent") == 0, s"$fetched")
+  }
+
+  test("fetch parity: (docId, score) == oracle top-k and text == generator text") {
+    fetchParity(engine)
+  }
+
+  test("fetch parity on the distributed norms path") {
+    val prop = "graft.norms.cache.max.bytes"
+    sys.props(prop) = "0"
+    val distEngine = try new QueryEngine(spark, indexDir) finally sys.props.remove(prop)
+    fetchParity(distEngine)
+  }
+
+  test("fetch of a top-k docId missing from the docstore names it and the index dir") {
+    built
+    val copy = SparkSpec.tmpDir("graft-e2e-damaged")
+    val src = java.nio.file.Path.of(indexDir)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      val to = java.nio.file.Path.of(copy).resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(p, to)
+    } finally walk.close()
+    val parts = new java.io.File(s"$copy/docstore").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(parts.length >= 2, s"docstore has ${parts.length} part files")
+    val gone = parts.last
+    val goneIds = spark.read.parquet(gone.getPath).select("docId").collect().map(_.getLong(0)).toSet
+    assert(gone.delete())
+    new java.io.File(gone.getParent, s".${gone.getName}.crc").delete()
+
+    val damaged = new QueryEngine(spark, copy)
+    val q = SearchQuery.of(Seq("text" -> Seq("the")), N.toInt)
+    val hits = damaged.topK(q).collect().map(_.getLong(0))
+    val missing = hits.filter(goneIds)
+    assert(missing.nonEmpty, "the removed part holds no hit of the query")
+    val e = intercept[IllegalStateException](damaged.fetch(q))
+    assert(e.getMessage.contains(copy), e.getMessage)
+    assert(e.getMessage.contains(s"${missing.length} of ${hits.length} top-k docIds"), e.getMessage)
+    assert(e.getMessage.contains(missing.take(20).mkString(", ")), e.getMessage)
+  }
+
   test("pv/uv stats match reference semantics (single=header, multi=|intersection|)") {
     queries.foreach { case (name, q) =>
       val got = engine.searchStats(q)

@@ -1,9 +1,17 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.build.{IndexBuilder, IndexConfig}
 import graft.gen.TranscriptGen
+import graft.query.{QueryEngine, SearchQuery}
 
 /** Physical-plan assertions — the scale contract (SURVEY.md §4): partition
   * pruning on the bucket shard column (R1), parquet filter pushdown, and
@@ -46,6 +54,68 @@ class PlanSpec extends SparkFunSuite {
     val plan = executedPlan(df)
     assert(plan.contains("PushedFilters") && plan.contains("In(docId"),
       s"docId filter not pushed in:\n$plan")
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** The Spark jobs `body` runs under a job group owned by this test, and
+    * the (root dir name, pushed filters) of every parquet scan its SQL
+    * actions executed. Listener events arrive asynchronously but in order
+    * on the shared bus: a fence job run after `body` marks the end. */
+  private def traced(body: => Unit): (Int, Seq[(String, String)]) = {
+    val sc = spark.sparkContext
+    val group = s"planspec-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger()
+    val fence = new CountDownLatch(1)
+    val scans = new ConcurrentLinkedQueue[(String, String)]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == s"$group-fence") fence.countDown()
+        }
+    }
+    val scanListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Aqe.collect(qe.executedPlan) { case s: FileSourceScanExec =>
+          (s.relation.location.rootPaths.head.getName, s.metadata.getOrElse("PushedFilters", ""))
+        }.foreach(scans.add)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(scanListener)
+    try {
+      sc.setJobGroup(group, "PlanSpec traced")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "PlanSpec fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fence.await(60, TimeUnit.SECONDS), "listener bus did not deliver the fence job")
+    } finally {
+      spark.listenerManager.unregister(scanListener)
+      sc.removeSparkListener(jobListener)
+    }
+    (jobs.get, scans.asScala.toSeq)
+  }
+
+  test("served fetch: one pushed-down docstore job over the top-k jobs; its frame is local") {
+    val engine = new QueryEngine(spark, dir)
+    val q = SearchQuery.of(Seq("text" -> Seq("error")), 10)
+    assert(engine.fetch(q).collect().nonEmpty) // hot: stats and top-k plan cached
+    val (topKJobs, _) = traced(engine.topK(q).collect())
+    var fetched: DataFrame = null
+    val (fetchJobs, scans) = traced { fetched = engine.fetch(q) }
+    assert(fetchJobs <= topKJobs + 1, s"fetch ran $fetchJobs jobs, top-k alone $topKJobs")
+    val docstoreScans = scans.filter(_._1 == "docstore")
+    assert(docstoreScans.size == 1, s"scans: $scans")
+    assert(docstoreScans.head._2.contains("In(docId"), s"docId IN not pushed: ${docstoreScans.head}")
+    assert(traced(fetched.collect())._1 == 0, "collecting a fetched frame ran a job")
+
+    val absent = SearchQuery.of(Seq("text" -> Seq("zzznotpresent")), 10)
+    assert(engine.fetch(absent).collect().isEmpty)
+    val (absentTopKJobs, _) = traced(engine.topK(absent).collect())
+    val (absentJobs, absentScans) = traced(engine.fetch(absent).collect())
+    assert(absentJobs == absentTopKJobs && !absentScans.exists(_._1 == "docstore"),
+      s"absent-term fetch ran $absentJobs jobs (top-k $absentTopKJobs), scans $absentScans")
   }
 
   test("column pruning: projecting (term) reads only needed columns") {

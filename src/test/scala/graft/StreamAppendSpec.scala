@@ -64,4 +64,17 @@ class StreamAppendSpec extends SparkFunSuite {
       assert(after3.contains(("2026-01-01 03:00:00", "view", 1L, 5.0)))
     } finally q.stop()
   }
+
+  test("append gate staging drops null-ts events from both batches") {
+    val stage = SparkSpec.tmpDir("stream-stage") + "/stage"
+    val ev = Seq[(Long, String)](
+      (1L, "2026-01-01 00:05:00"), (2L, null), (3L, "2026-01-01 02:10:00"))
+      .toDF("event_id", "tss")
+      .select(col("event_id"), col("tss").cast("timestamp").as("ts"))
+    val boundary = java.sql.Timestamp.from(java.time.Instant.parse("2026-01-01T01:00:00Z"))
+    EventStream.stageBatches(ev, boundary, stage)
+    val staged = spark.read.parquet(stage).select("event_id", "b").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(staged == Set((1L, "b1"), (3L, "b2")), s"staged: $staged")
+  }
 }
