@@ -59,8 +59,9 @@ object SearchCli {
 
     case "explain" :: dir :: kw :: _ =>
       // show the physical plan of the top-k query (bucket partition pruning,
-      // term pushdown, the chunk exchange, the top-k tree-reduce), then run
-      // it profiled so the block-max benefit is a measured number, not an
+      // term pushdown, the chunk exchange, the top-k tree-reduce) — the plan
+      // a topK miss executes, not its cached local result — then run it
+      // profiled so the block-max benefit is a measured number, not an
       // inference: postings/blocks bypassed undecoded vs decoded vs scored
       val pairs = kw.split(',').toSeq.map { p =>
         val Array(f, t) = p.split(":", 2)
@@ -68,7 +69,7 @@ object SearchCli {
       }
       val q = SearchQuery.of(pairs, 10)
       val engine = new QueryEngine(spark, dir)
-      engine.topK(q).explain("formatted")
+      engine.topKPlan(q).explain("formatted")
       val (hits, kstats) = engine.topKProfiled(q)
       println(s"[kernel] hits=${hits.length} " +
         kstats.toSeq.sortBy(_._1).map { case (k0, v) => s"$k0=$v" }.mkString(" "))

@@ -1,5 +1,8 @@
 package graft.build
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -370,19 +373,33 @@ object IndexBuilder {
     fs.rename(tmp, p)
   }
 
+  /** Strict reader for `_manifest/core.json`. A missing, truncated or
+    * corrupt manifest, a missing key or a value of the wrong type throws an
+    * IllegalStateException naming the file and the key. */
   def readManifest(spark: SparkSession, dir: String): IndexManifest = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new Path(dir, "_manifest/core.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def bad(what: String) =
+      new IllegalStateException(s"index manifest $p: $what — rebuild the index")
+    if (!fs.exists(p)) throw bad("not found (not an index, or its build never finished)")
     val in = fs.open(p)
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    in.readFully(bytes)
-    in.close()
-    val s = new String(bytes, "UTF-8")
-    def longOf(k: String): Long = s"""\"$k\":(\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-    def strOf(k: String): String = (s"""\"$k\":\"([^\"]*)\"""").r.findFirstMatchIn(s).get.group(1)
-    val avg = """"(\w+)":([0-9.Ee+-]+)""".r.findAllMatchIn(
-      s.substring(s.indexOf("\"avgdl\":") + 8)).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    IndexManifest(strOf("buildId"), longOf("numDocs"), longOf("buckets").toInt,
-      longOf("chunkDocs"), longOf("blockSize").toInt, avg)
+    val root = try new ObjectMapper().readTree(in: java.io.InputStream)
+      catch { case e: JsonProcessingException => throw bad(s"not valid JSON: ${e.getOriginalMessage}") }
+      finally in.close()
+    if (root == null || !root.isObject) throw bad("not a JSON object")
+    def key(k: String, kind: String)(ok: JsonNode => Boolean): JsonNode = {
+      val v = root.get(k)
+      if (v == null) throw bad(s"missing key '$k'")
+      if (!ok(v)) throw bad(s"key '$k' is not $kind: $v")
+      v
+    }
+    def long(k: String) = key(k, "an integer")(v => v.isIntegralNumber && v.canConvertToLong).asLong
+    def int(k: String) = key(k, "an int")(v => v.isIntegralNumber && v.canConvertToInt).asInt
+    val avgdl = key("avgdl", "an object")(_.isObject).properties().asScala.map { e =>
+      if (!e.getValue.isNumber) throw bad(s"key 'avgdl.${e.getKey}' is not a number: ${e.getValue}")
+      e.getKey -> e.getValue.asDouble
+    }.toMap
+    IndexManifest(key("buildId", "a string")(_.isTextual).asText, long("numDocs"), int("buckets"),
+      long("chunkDocs"), int("blockSize"), avgdl)
   }
 }

@@ -184,6 +184,12 @@ object IvfIndex {
     * the centroids the lists were built with, not a recomputation. */
   def loadCentroids(spark: SparkSession, dir: String): Array[(Int, Array[Float])] = {
     val f = new java.io.File(s"$dir-centroids.bin")
+    if (!f.isFile)
+      throw new IllegalStateException(
+        if (new java.io.File(dir).isDirectory)
+          s"IVF index at $dir has no quantizer sidecar $f: the index predates the " +
+            ".bin sidecar layout — rebuild it with IvfIndex.build"
+        else s"no IVF index at $dir (and no quantizer sidecar $f)")
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
       new java.io.FileInputStream(f)))
     try {

@@ -58,6 +58,10 @@ final case class SearchStats(total: Long, pv: Long, uv: Long)
   *   docstore fetch: docId IN (hits) pushdown scan, collected;
   *     ordered by top-k rank on the driver (no join, no exchange) — job 3
   *
+  * Jobs 1-2 run only on a miss: the top-k rows are cached per (terms, k)
+  * and the term stats per term, so a repeated top-k runs no job and a
+  * repeated fetch runs job 3 alone.
+  *
   * Replaces the reference's searcher/meta/hdfsreader HTTP fan-out
   * (inverted_index_gz_client.go:152-202, doc_gz_client.go:118-232): the
   * chunk shuffle moves the postings, and the fetch adds no exchange.
@@ -87,13 +91,17 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   private val statsCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Option[(Long, Long)]]()
 
-  // prepared-query cache, keyed (shape, terms, k): the planned top-k or
-  // score-all Dataset, or the AND count, of a repeated interactive request
-  // (the dominant serving pattern; the reference fronts its searcher with
-  // memcached the same way). Valid because the index is immutable per
-  // engine and every entry is a deterministic function of its key. Cleared
-  // wholesale at the cap (plans rebuild in ~20 ms; an LRU would buy nothing
-  // at this entry cost).
+  // prepared-query cache, keyed (shape, terms, k), of a repeated interactive
+  // request (the dominant serving pattern; the reference fronts its searcher
+  // with memcached the same way): the top-k RESULT (≤k (docId, score) rows
+  // as a local frame — collecting it runs no job), the planned score-all
+  // Dataset, or the AND count. Valid because the index is immutable per
+  // engine and every entry is a deterministic function of its key. Retained:
+  // at most PreparedMaxEntries × k rows of top-k results; only score-all
+  // entries are plans, which pin norms copies (see NormsCacheMaxBytes).
+  // Cleared wholesale at the cap: a miss costs a plan plus its execution
+  // (termstats + one chunk-shuffle job), and an LRU would buy little over
+  // rebuilding the working set once per 1024 distinct keys.
   private val PreparedMaxEntries = 1024
   private val prepared =
     new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, String)], Int), AnyRef]()
@@ -120,9 +128,10 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     * semi-join path below keeps the 100 TB shape: norms pruned to chunks
     * that actually hold postings, shipped through the same shuffle. */
   // sys-prop override so specs cover BOTH paths. Retention bound: cached
-  // plans share these relations in their analyzed plans, but the optimizer
-  // copies the queried fields' rows into each plan, so the prepared cache
-  // can hold PreparedMaxEntries x the queried fields' norms bytes.
+  // score-all plans (the only plans the prepared cache holds; top-k entries
+  // are result rows) share these relations in their analyzed plans, but the
+  // optimizer copies the queried fields' rows into each plan, so the prepared
+  // cache can hold PreparedMaxEntries x the queried fields' norms bytes.
   private val NormsCacheMaxBytes =
     sys.props.get("graft.norms.cache.max.bytes").map(_.toLong).getOrElse(64L << 20)
   private lazy val normsLocal: Option[Map[String, DataFrame]] = {
@@ -164,11 +173,17 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
     q.terms.flatMap(k => all(k).map(v => k -> v)).toMap
   }
 
-  /** Top-k (docId, score), exact BM25 over the AND intersection. */
-  def topK(q: SearchQuery): DataFrame = memo(("topK", q.terms, q.k))(topKPlan(q))
+  /** Top-k (docId, score), exact BM25 over the AND intersection, as a LOCAL
+    * frame: a miss runs the top-k plan once and caches its ≤k rows, so
+    * collecting (or paging, or fetching) a repeated query runs no top-k job. */
+  def topK(q: SearchQuery): DataFrame = memo(("topK", q.terms, q.k)) {
+    val plan = topKPlan(q)
+    spark.createDataFrame(java.util.Arrays.asList(plan.collect(): _*), plan.schema)
+  }
 
-  /** The top-k plan; with `tel` the kernel also feeds its counters. */
-  private def topKPlan(q: SearchQuery, tel: QueryKernel.KernelTelemetry = null): DataFrame = {
+  /** The top-k plan (what `topK` executes on a miss, and what `SearchCli
+    * explain` prints); with `tel` the kernel also feeds its counters. */
+  private[graft] def topKPlan(q: SearchQuery, tel: QueryKernel.KernelTelemetry = null): DataFrame = {
     import spark.implicits._
     candidates(q, q.k, tel)
       .toDF("docId", "score")
@@ -304,10 +319,9 @@ class QueryEngine(val spark: SparkSession, val dir: String) extends Serializable
   }
 
   /** Profiled top-k: the topK plan run with kernel accumulators registered,
-    * returning (hits, counters). Bypasses the prepared-query cache on
-    * purpose — an accumulator is per-query state a cached plan must not pin
-    * — so this is a diagnostic surface (SearchCli explain), not the serving
-    * path. */
+    * returning (hits, counters). Bypasses the prepared-query cache — a cached
+    * result would report no kernel work — so this is a diagnostic surface
+    * (SearchCli explain), not the serving path. */
   def topKProfiled(q: SearchQuery): (Array[(Long, Double)], Map[String, Long]) = {
     import spark.implicits._
     val tel = QueryKernel.KernelTelemetry.register(spark)

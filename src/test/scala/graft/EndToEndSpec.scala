@@ -243,6 +243,32 @@ class EndToEndSpec extends SparkFunSuite {
     assert(e.getMessage.contains(missing.take(20).mkString(", ")), e.getMessage)
   }
 
+  test("a truncated or incomplete core.json fails with the manifest path and the bad key") {
+    built
+    val copy = SparkSpec.copyOf(indexDir, "graft-e2e-manifest")
+    val core = java.nio.file.Path.of(copy, "_manifest", "core.json")
+    val json = new String(java.nio.file.Files.readAllBytes(core), "UTF-8")
+    def failure(content: String): String = {
+      java.nio.file.Files.write(core, content.getBytes("UTF-8"))
+      java.nio.file.Files.deleteIfExists(core.resolveSibling(".core.json.crc"))
+      val e = intercept[IllegalStateException](new QueryEngine(spark, copy))
+      assert(e.getMessage.contains(s"$copy/_manifest/core.json"), e.getMessage)
+      e.getMessage
+    }
+    assert(failure(json.take(json.indexOf("\"chunkDocs\"") + 5)).contains("not valid JSON"))
+    assert(failure("").contains("not a JSON object"))
+    val noChunkDocs = json.replaceFirst("\"chunkDocs\":\\d+,", "")
+    assert(noChunkDocs != json)
+    assert(failure(noChunkDocs).contains("missing key 'chunkDocs'"))
+    assert(failure(json.replaceFirst("\"numDocs\":(\\d+)", "\"numDocs\":\"$1\""))
+      .contains("key 'numDocs' is not an integer"))
+    java.nio.file.Files.delete(core)
+    assert(intercept[IllegalStateException](IndexBuilder.readManifest(spark, copy))
+      .getMessage.contains("not found"))
+    // the untouched original still opens
+    assert(IndexBuilder.readManifest(spark, indexDir) == built)
+  }
+
   test("pv/uv stats match reference semantics (single=header, multi=|intersection|)") {
     queries.foreach { case (name, q) =>
       val got = engine.searchStats(q)

@@ -107,6 +107,17 @@ class IvfSpec extends SparkFunSuite {
     assert(hits.map(_.getLong(0)).contains(5L)) // its own cluster is probed
   }
 
+  test("an IVF index without its .bin quantizer sidecar fails with a rebuild message") {
+    val old = SparkSpec.copyOf(dir, "graft-ivf-pre-bin") // the lists, not the sidecar
+    assert(!new java.io.File(s"$old-centroids.bin").exists())
+    val e = intercept[IllegalStateException](IvfIndex.loadCentroids(spark, old))
+    assert(e.getMessage.contains(old) && e.getMessage.contains("predates") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+    val none = intercept[IllegalStateException](IvfIndex.loadCentroids(spark, s"$old-absent"))
+    assert(none.getMessage.contains("no IVF index"), none.getMessage)
+    assert(IvfIndex.loadCentroids(spark, dir).nonEmpty) // the original keeps its sidecar
+  }
+
   test("IVF recall@10 >= scanned coverage (isotropic-vector floor, like AnnIndexSpec)") {
     val total = emb.count().toDouble
     val qs = emb.filter(col("vec_id") < 5).collect()

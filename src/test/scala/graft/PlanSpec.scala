@@ -4,7 +4,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -116,6 +117,35 @@ class PlanSpec extends SparkFunSuite {
     val (absentJobs, absentScans) = traced(engine.fetch(absent).collect())
     assert(absentJobs == absentTopKJobs && !absentScans.exists(_._1 == "docstore"),
       s"absent-term fetch ran $absentJobs jobs (top-k $absentTopKJobs), scans $absentScans")
+  }
+
+  test("top-k result cache: a warm topK runs no job and reads a local relation") {
+    val engine = new QueryEngine(spark, dir)
+    val q = SearchQuery.of(Seq("text" -> Seq("error", "timeout")), 10)
+    val first = engine.topK(q).collect()
+    assert(first.nonEmpty)
+    var again: Array[Row] = null
+    val (jobs, scans) = traced { again = engine.topK(q).collect() }
+    assert(jobs == 0 && scans.isEmpty, s"warm topK ran $jobs jobs, scans $scans")
+    assert(again.toSeq == first.toSeq)
+    val analyzed = engine.topK(q).queryExecution.analyzed
+    assert(analyzed.isInstanceOf[LocalRelation], s"warm topK plan:\n$analyzed")
+  }
+
+  test("top-k result cache: a cold topK runs the plan's jobs once, then none") {
+    val engine = new QueryEngine(spark, dir)
+    val q = SearchQuery.of(Seq("text" -> Seq("error")), 7)
+    var cold: Array[Row] = null
+    val (coldJobs, coldScans) = traced { cold = engine.topK(q).collect() }
+    // stats are cached now: the plan alone, run again outside the cache
+    var planned: Array[Row] = null
+    val (planJobs, _) = traced { planned = engine.topKPlan(q).collect() }
+    assert(planJobs >= 1 && coldJobs >= planJobs, s"cold topK $coldJobs jobs, plan $planJobs")
+    assert(coldScans.exists(_._1 == "postings"), s"cold topK scans: $coldScans")
+    var warm: Array[Row] = null
+    val (warmJobs, warmScans) = traced { warm = engine.topK(q).collect() }
+    assert(warmJobs == 0 && warmScans.isEmpty, s"second topK ran $warmJobs jobs, scans $warmScans")
+    assert(cold.length == 7 && warm.toSeq == cold.toSeq && planned.toSeq == cold.toSeq)
   }
 
   test("column pruning: projecting (term) reads only needed columns") {

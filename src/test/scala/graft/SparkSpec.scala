@@ -20,6 +20,19 @@ object SparkSpec {
   }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A fresh temp dir holding a recursive copy of `src`. */
+  def copyOf(src: String, prefix: String): String = {
+    val to = tmpDir(prefix)
+    val from = java.nio.file.Path.of(src)
+    val walk = java.nio.file.Files.walk(from)
+    try walk.forEach { p =>
+      val t = java.nio.file.Path.of(to).resolve(from.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    } finally walk.close()
+    to
+  }
 }
 
 abstract class SparkFunSuite extends AnyFunSuite {
